@@ -45,10 +45,9 @@ def cmd_build(args) -> int:
         n_salts=args.salts,
         heavy_df_threshold=args.heavy_df,
         resume=not args.no_resume,
-        tokenizer=args.tokenizer,
-        # fused one-pass build when the input is a plain path and turn_idx
-        # is dense (build_index falls back automatically otherwise)
-        source_path=args.input if args.tokenizer == "files" else None,
+        # fused one-pass build when turn_idx is dense (build_index falls
+        # back to the two-pass path automatically otherwise)
+        source_path=args.input,
     )
     print(json.dumps(summary))
     return 0
@@ -187,11 +186,6 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--salts", type=int, default=8)
     b.add_argument("--heavy-df", type=int, default=20_000)
     b.add_argument("--no-resume", action="store_true")
-    b.add_argument(
-        "--tokenizer",
-        choices=["files", "pandas", "jvm", "python"],
-        default="files",
-    )
     b.set_defaults(fn=cmd_build)
 
     q = sub.add_parser("query", help="BM25 top-k")

@@ -12,37 +12,45 @@ Pipeline (SURVEY.md §7.1 M2/M3, north-rule core):
    *is* the row, as in the reference's parameter projection
    (``transform/RecordsTransform.java:54-76``); per-turn text equality vs the
    source is asserted in tests.
-3. **SPIMI chunks** — shuffle-free in the default ``files`` mode: one task
-   per docs-store file (the same unit Spark's scan planner uses); the task
-   reads its file with pyarrow, tokenizes + tf-counts + varbyte-encodes in
-   one vectorized pandas/numpy pass, and writes one chunk parquet with an
-   atomic tmp→rename plus a per-partition manifest JSON. A re-run skips
+3. **SPIMI chunks** — shuffle-free, one Arrow/pandas kernel. The fused
+   path (``build_segments``) gives each task one source span and writes
+   the docs file and the chunk in the same pass; the two-pass path
+   (``build_chunks_files``) gives each task one docs-store file. A task
+   tokenizes + tf-counts + varbyte-encodes in one vectorized pass and
+   writes one chunk parquet, sorted by its (bucket, sub, salt, term) merge
+   key, plus a per-partition manifest JSON written last. A re-run skips
    completed partitions (the analog of the reference's offset-reset /
    checkpoint-ack recovery, ``extract/KafkaMsgListener.java:76-79,312-330``);
-   a changed docs layout invalidates the manifests via ``_filelist.json``.
-4. **Term stats** — ``groupBy(term)`` over chunk rows (map-side combined;
-   hot terms are sums of few-hundred-byte rows, not row explosions; parquet
-   column pruning keeps the posting binaries out of this scan).
-5. **Salted compaction merge** — chunks of a term are concatenated in doc-id
-   order and re-cut into 128-posting blocks with exact per-block max-score
-   bounds. Terms with df above a threshold are salted into ``n_salts``
-   disjoint sub-streams (a doc lives in exactly one stream, so BM25 sums
-   stay exact) to keep the merge balanced under Zipf skew (B3). This is the
-   ONLY corpus-wide shuffle in the whole build, and it moves compressed
-   chunk bytes (~10× smaller than the token stream).
+   a changed work list invalidates the manifests via ``_filelist.json``.
+4. **Term stats** — per-term (df, cf) sums over chunk rows, aggregated on
+   the driver from the manifest-priced ``term, n_docs, cf`` columns (a
+   ``groupBy(term)`` above the row budget).
+5. **Salted compaction merge** (``build_postings_direct``) — chunks of a
+   term are concatenated in doc-id order and re-cut into 128-posting
+   blocks with exact per-block max-score bounds. Each merge task reads its
+   own (bucket, sub) group's row-group span from the sorted chunk files,
+   so no Spark shuffle moves the postings. Groups whose heavy terms (df
+   above a threshold) sum past ``SPLIT_POSTINGS`` fan out into salt tasks
+   (a doc lives in exactly one stream, so BM25 sums stay exact) to keep
+   the merge balanced under Zipf skew (B3). The shuffle spelling
+   (``build_postings``) serves delta segments and chunk files written
+   with a different layout.
 6. **Postings layout** — parquet partitioned by ``bucket`` (md5-based:
    first 15 hex chars of ``md5(term)`` mod ``n_buckets``, see
    ``index/bucketing.py`` — md5 so the driver AND the DuckDB oracle can
    compute buckets without a Spark job) so a query's ``bucket IN … AND
    term IN …`` filter prunes partitions and pushes predicates into the
-   scan. The merge tasks hold whole (bucket, sub, salt) groups, so the
-   partitioned write emits directly from the merge — no extra shuffle.
+   scan. Merge tasks write their block files straight into that layout.
 
-Scale posture: one corpus shuffle total (the merge); nothing collects more
-than per-partition counts (ints) to the driver. Knobs: ``n_partitions``
-(SPIMI group size ≈ corpus/n_partitions must fit an executor),
-``n_buckets`` (query-side pruning granularity), ``n_salts`` ×
-``heavy_df_threshold`` (merge-group upper bound ≈ heavy-term df / n_salts).
+Scale posture: the fused build moves no corpus bytes through a shuffle —
+spans, docs files and merge groups are all read task-side from the
+shared store. The two-pass fallback adds one docs-store write (map-only
+with a broadcast offset table; a shuffle join only for non-dense
+``turn_idx`` or above ``BROADCAST_CONV_LIMIT`` conversations). Nothing
+collects more than per-partition counts (ints) to the driver. Knobs:
+``n_partitions`` (SPIMI fan-out floor), ``n_buckets`` (query-side pruning
+granularity), ``n_salts`` × ``heavy_df_threshold`` (merge-group upper
+bound ≈ heavy-term df / n_salts).
 """
 
 from __future__ import annotations
@@ -60,8 +68,6 @@ from pyspark.sql import types as T
 
 from .. import B, BLOCK_SIZE, K1
 from ..query.algebra import SPARK_TOKEN_RE
-from ..tokenize import tokenize_series
-from .codec import encode_doc_ids, encode_tfs
 
 # groups per bucket in the compaction merge — parallelism knob, independent
 # of the bucket count (a term always lands in exactly one (bucket, sub))
@@ -75,8 +81,8 @@ MERGE_SUBSPLIT = 8
 # work lists are uniform, so the coarser tail stays balanced. A PURE
 # function of the work-list size — never of the executor count — so the
 # same input yields the identical job at every parallelism level (the
-# N-vs-4N methodology's invariant). Env-overridable.
-TASK_PACK = int(os.environ.get("SPARK_GRAFT_TASK_PACK", "3"))
+# N-vs-4N methodology's invariant).
+TASK_PACK = 3
 
 
 def _packed_partitions(n_units: int) -> int:
@@ -85,17 +91,16 @@ def _packed_partitions(n_units: int) -> int:
 # a merge group whose heavy terms sum past this many postings fans out into
 # doc-disjoint salt tasks (≤ n_salts) — ~2M postings ≈ a comfortable
 # single-task decode+encode (sub-second); far below it, extra tasks just
-# multiply per-task file-open overhead
-SPLIT_POSTINGS = int(os.environ.get("SPARK_GRAFT_SPLIT_POSTINGS", 2_000_000))
+# multiply per-task file-open overhead. ``build_postings_direct``'s
+# ``split_postings`` argument overrides it per call.
+SPLIT_POSTINGS = 2_000_000
 
-# chunk-file compression: intermediate SPIMI chunks are written once and read
-# twice (term stats + merge) — cheap-but-fast beats maximum ratio here
-# chunk varbyte columns are already compressed (delta-gap + base-128) —
-# zstd over them costs SPIMI-write and merge-read CPU for ~25% size on a
-# TRANSIENT artifact; metadata columns stay zstd. Env var forces one codec
-# for everything (diagnostics).
-_CHUNK_CODEC_ENV = os.environ.get("SPARK_GRAFT_CHUNK_COMPRESSION")
-CHUNK_COMPRESSION = _CHUNK_CODEC_ENV or {
+# chunk-file compression: intermediate SPIMI chunks are written once and
+# read twice (term stats + merge). The varbyte columns are already
+# compressed (delta-gap + base-128) — zstd over them costs SPIMI-write and
+# merge-read CPU for ~25% size on a TRANSIENT artifact; metadata columns
+# stay zstd.
+CHUNK_COMPRESSION = {
     **{c: "NONE" for c in ("doc_ids", "tfs", "dls", "pos")},
     **{
         c: "ZSTD"
@@ -488,33 +493,38 @@ def build_docs(transcripts: DataFrame) -> DataFrame:
 
 def _write_chunk(
     chunks_dir: str, prefix: str, part_id: int, rows: dict,
-    n_rows_docs: int, n_terms: int, t0: float, sum_dl: int = 0,
-    wfs=None, n_buckets: "int | None" = None, n_salts: int = 8,
+    n_rows_docs: int, n_terms: int, t0: float, *, n_buckets: int,
+    sum_dl: int = 0, wfs=None, n_salts: int = 8,
     span_keys: "tuple | None" = None,
 ) -> pd.DataFrame:
     """Write one SPIMI chunk parquet, then its manifest (data first,
     manifest LAST — the per-partition commit order the fswrite protocol
-    relies on); returns the manifest row (shared by all tokenizer
-    kernels). ``wfs`` is the filesystem adapter (None = local POSIX).
+    relies on); returns the manifest row. ``wfs`` is the filesystem
+    adapter (None = local POSIX).
 
-    With ``n_buckets`` set, every term row carries its (bucket, sub,
-    salt) merge key and the file is SORTED by (bucket, sub, salt, term)
-    with small row groups — the layout the ZERO-SHUFFLE merge needs: a
-    merge task later reads exactly its group's contiguous span from each
-    chunk file via parquet row-group stats, so the corpus never crosses a
-    Spark shuffle or the JVM→Python Arrow hop (round-3 What's-wrong #1:
-    the merge's shuffle+IPC scaled at ~0.63 and capped build scaling at
-    ~0.73). The salt (hash of the row's min_doc) is written for EVERY
-    row; the merge planner uses it only for heavy-term groups."""
+    Every term row carries its (bucket, sub, salt) merge key and the file
+    is SORTED by (bucket, sub, salt, term) with small row groups — the
+    layout the ZERO-SHUFFLE merge needs: a merge task later reads exactly
+    its group's contiguous span from each chunk file via parquet row-group
+    stats, so the corpus never crosses a Spark shuffle or the JVM→Python
+    Arrow hop (round-3 What's-wrong #1: the merge's shuffle+IPC scaled at
+    ~0.63 and capped build scaling at ~0.73). The salt (round-robin over
+    the partition id) is written for EVERY row; the merge planner uses it
+    only for heavy-term groups."""
     import pyarrow as pa
 
-    from .bucketing import bucket_sub_arrays
+    from .bucketing import bucket_sub_arrays, salt_of_part
     from .fswrite import LOCAL
 
     wfs = wfs or LOCAL
     wfs.makedirs(chunks_dir)
     path = os.path.join(chunks_dir, f"{prefix}part-{part_id:05d}.parquet")
-    fields = [
+    b, s = bucket_sub_arrays(
+        np.asarray(rows["term"], dtype=object), n_buckets, MERGE_SUBSPLIT
+    )
+    salt = np.full(len(b), salt_of_part(part_id, n_salts), dtype=np.int32)
+    rows = {**rows, "bucket": b, "sub": s, "salt": salt}
+    schema = pa.schema([
         ("term", pa.string()),
         ("part_id", pa.int32()),
         ("min_doc", pa.int64()),
@@ -525,29 +535,19 @@ def _write_chunk(
         ("tfs", pa.binary()),
         ("dls", pa.binary()),
         ("pos", pa.binary()),
-    ]
-    row_group_size = None
-    if n_buckets:
-        from .bucketing import salt_of_part
-
-        b, s = bucket_sub_arrays(
-            np.asarray(rows["term"], dtype=object), n_buckets, MERGE_SUBSPLIT
-        )
-        salt = np.full(len(b), salt_of_part(part_id, n_salts), dtype=np.int32)
-        rows = {**rows, "bucket": b, "sub": s, "salt": salt}
-        fields += [("bucket", pa.int32()), ("sub", pa.int32()), ("salt", pa.int32())]
-        n = len(b)
-        row_group_size = max(512, -(-n // 64))  # ≤ ~64 groups per file
-    table = pa.table(rows, schema=pa.schema(fields))
-    if n_buckets:
-        table = table.sort_by(
-            [
-                ("bucket", "ascending"), ("sub", "ascending"),
-                ("salt", "ascending"), ("term", "ascending"),
-            ]
-        )
+        ("bucket", pa.int32()),
+        ("sub", pa.int32()),
+        ("salt", pa.int32()),
+    ])
+    table = pa.table(rows, schema=schema).sort_by(
+        [
+            ("bucket", "ascending"), ("sub", "ascending"),
+            ("salt", "ascending"), ("term", "ascending"),
+        ]
+    )
     wfs.write_table(
-        table, path, compression=CHUNK_COMPRESSION, row_group_size=row_group_size
+        table, path, compression=CHUNK_COMPRESSION,
+        row_group_size=max(512, -(-len(b) // 64)),  # ≤ ~64 groups per file
     )
     manifest = {
         "partition_id": part_id,
@@ -559,12 +559,11 @@ def _write_chunk(
         "attempt": 1,
     }
     ret = pd.DataFrame([manifest])  # MANIFEST_SCHEMA columns only
-    if n_buckets:
-        # layout keys ride in the json sidecar (the merge planner verifies
-        # them) but NOT in the applyInPandas return row
-        manifest["n_buckets"] = int(n_buckets)
-        manifest["n_subs"] = MERGE_SUBSPLIT
-        manifest["n_salts"] = int(n_salts)
+    # layout keys ride in the json sidecar (the merge planner verifies
+    # them) but NOT in the applyInPandas return row
+    manifest["n_buckets"] = int(n_buckets)
+    manifest["n_subs"] = MERGE_SUBSPLIT
+    manifest["n_salts"] = int(n_salts)
     if span_keys is not None:
         # sorted-source fast path: the sorted span's boundary PKs ride in
         # the json sidecar so the driver can verify global key disjointness
@@ -767,22 +766,14 @@ def _spimi_rows_for_texts(
 
 
 def _chunk_builder_pandas(chunks_dir: str, prefix: str = "",
-                          store_positions: bool = False, wfs=None,
-                          n_buckets: "int | None" = None, n_salts: int = 8):
-    """applyInPandas kernel: tokenize, tf-count, and varbyte-encode entirely
-    inside the Arrow batch — C-speed regex + factorize/unique, no per-token
-    Python objects beyond one flat list.
-
-    Compared to the ``jvm`` kernel this moves tokenization out of the JVM:
-    the only shuffle is the docs rows themselves (``groupBy(part_id)`` over
-    ~100-byte rows), not the exploded token stream — at 10^12 turns that is
-    the difference between shuffling the corpus once and shuffling ~50× the
-    corpus in (doc, term, tf) rows. tf-counting: factorize terms to codes,
-    combine ``code * n_rows + row_pos`` into one int64 key, one
-    ``np.unique(return_counts)`` gives (term, doc) → tf sorted by
-    (term_code, doc) — doc ascending within a term because rows are
-    pre-sorted by doc_id.
-    """
+                          store_positions: bool = False, wfs=None, *,
+                          n_buckets: int, n_salts: int = 8):
+    """The SPIMI kernel over one partition's doc rows: tokenize, tf-count,
+    and varbyte-encode entirely inside the Arrow batch (byte-level
+    tokenizer, factorize + one stable argsort, segmented varbyte encode —
+    no per-token Python objects), then write the chunk + manifest. Used by
+    the two-pass files path (one docs file per call) and by
+    ``build_chunks`` (one hash partition per ``applyInPandas`` group)."""
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.time()
@@ -799,73 +790,6 @@ def _chunk_builder_pandas(chunks_dir: str, prefix: str = "",
             chunks_dir, prefix, part_id, rows, len(pdf), n_terms, t0,
             sum_dl=int(dls.sum()), wfs=wfs, n_buckets=n_buckets,
             n_salts=n_salts,
-        )
-
-    return build
-
-
-def _chunk_builder(chunks_dir: str, prefix: str = "",
-                   n_buckets: "int | None" = None, n_salts: int = 8):
-    """applyInPandas kernel: one SPIMI chunk per stable partition id.
-
-    Writes its own parquet + manifest with tmp→rename so a killed job leaves
-    only complete partitions behind; returns the manifest row.
-    """
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.time()
-        part_id = int(pdf["part_id"].iloc[0])
-        pdf = pdf.sort_values("doc_id")
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        dls = pdf["dl"].to_numpy(dtype=np.int64)
-        inv: dict[str, list[list[int]]] = {}
-        for i, toks in enumerate(tokenize_series(pdf["text"])):
-            if not toks:
-                continue
-            counts: dict[str, int] = {}
-            for t in toks:
-                counts[t] = counts.get(t, 0) + 1
-            d, dl = int(doc_ids[i]), int(dls[i])
-            for term, tf in counts.items():
-                e = inv.get(term)
-                if e is None:
-                    inv[term] = [[d], [tf], [dl]]
-                else:
-                    e[0].append(d)
-                    e[1].append(tf)
-                    e[2].append(dl)
-
-        terms = sorted(inv)
-        rows = {
-            "term": terms,
-            "part_id": [part_id] * len(terms),
-            "min_doc": [],
-            "max_doc": [],
-            "n_docs": [],
-            "cf": [],
-            "doc_ids": [],
-            "tfs": [],
-            "dls": [],
-            "pos": [],
-        }
-        for term in terms:
-            ds, tfs, ds_dl = inv[term]
-            d = np.asarray(ds, dtype=np.int64)  # ascending: input doc-sorted
-            rows["min_doc"].append(int(d[0]))
-            rows["max_doc"].append(int(d[-1]))
-            rows["n_docs"].append(len(d))
-            rows["cf"].append(int(sum(tfs)))
-            rows["doc_ids"].append(encode_doc_ids(d))
-            rows["tfs"].append(encode_tfs(np.asarray(tfs, dtype=np.int64)))
-            rows["dls"].append(encode_tfs(np.asarray(ds_dl, dtype=np.int64)))
-            rows["pos"].append(b"")
-
-        return _write_chunk(
-            chunks_dir, prefix, part_id, rows, len(pdf), len(terms), t0,
-            sum_dl=int(dls.sum()), n_buckets=n_buckets, n_salts=n_salts,
         )
 
     return build
@@ -888,146 +812,34 @@ def completed_partitions(
     return done
 
 
-def _chunk_builder_tf(chunks_dir: str, prefix: str = "",
-                      n_buckets: "int | None" = None, n_salts: int = 8):
-    """applyInPandas kernel over pre-counted (doc_id, dl, term, tf) rows.
-
-    Tokenization and tf-counting happened JVM-side (whole-stage codegen);
-    this kernel only sorts (pandas C sort), slices term runs, and varbyte-
-    encodes — vectorized numpy throughout, no per-token Python. Writes the
-    same chunk + manifest files as the python-tokenizer kernel.
-    """
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.time()
-        part_id = int(pdf["part_id"].iloc[0])
-        n_rows_docs = int(pdf["doc_id"].nunique())
-        pdf = pdf.sort_values(["term", "doc_id"], kind="stable")
-        terms_arr = pdf["term"].to_numpy()
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tfs = pdf["tf"].to_numpy(dtype=np.int64)
-        dls = pdf["dl"].to_numpy(dtype=np.int64)
-        n = len(terms_arr)
-        if n == 0:
-            starts = np.array([], dtype=np.int64)
-        else:
-            change = np.concatenate(
-                ([True], terms_arr[1:] != terms_arr[:-1])
-            )
-            starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], n)
-        bounds = np.append(starts, n)
-
-        # all-segments-at-once encoding (one vectorized pass per column)
-        from .codec import encode_doc_id_segments, vb_encode_segments
-
-        enc_ids = encode_doc_id_segments(ids, bounds)
-        enc_tfs = vb_encode_segments(tfs, bounds)
-        enc_dls = vb_encode_segments(dls, bounds)
-        seg_cf = np.add.reduceat(tfs, starts) if n else np.array([], dtype=np.int64)
-
-        rows = {
-            "term": terms_arr[starts],
-            "part_id": np.full(len(starts), part_id, dtype=np.int32),
-            "min_doc": ids[starts],
-            "max_doc": ids[ends - 1],
-            "n_docs": (ends - starts).astype(np.int32),
-            "cf": seg_cf.astype(np.int64),
-            "doc_ids": enc_ids,
-            "tfs": enc_tfs,
-            "dls": enc_dls,
-            "pos": [b""] * len(starts),
-        }
-
-        sum_dl = int(pdf[["doc_id", "dl"]].drop_duplicates("doc_id")["dl"].sum())
-        return _write_chunk(
-            chunks_dir, prefix, part_id, rows, n_rows_docs, len(starts), t0,
-            sum_dl=sum_dl, n_buckets=n_buckets, n_salts=n_salts,
-        )
-
-    return build
-
-
 def build_chunks(
     docs: DataFrame,
     chunks_dir: str,
     n_partitions: int,
     resume: bool = True,
     prefix: str = "",
-    tokenizer: str = "jvm",
     store_positions: bool = False,
-    n_buckets: "int | None" = None,
+    *,
+    n_buckets: int,
     n_salts: int = 8,
 ) -> DataFrame:
-    """SPIMI pass. Returns the manifest DataFrame (one row per partition built).
+    """Hash-partitioned SPIMI pass — the delta-chunk writer of
+    ``apply_increments``. Returns the manifest DataFrame (one row per
+    partition built).
 
     ``part_id = xxhash64(conv_id) % n_partitions`` is a pure function of the
-    data, so a resumed run regenerates exactly the missing partitions.
-
-    Three equivalent kernels (tests assert identical output):
-
-    - ``tokenizer="pandas"`` (default): tokenize + tf-count + encode all
-      inside the Arrow batch (C regex, factorize/unique) — the ONLY shuffle
-      is the docs rows into part_id groups. Measured fastest and the best
-      thread-scaler: the jvm path shuffles the exploded token stream (~50×
-      the corpus in (doc,term,tf) rows) and its hash-agg dominates GC.
-    - ``tokenizer="jvm"``: ``lower`` + ``regexp_extract_all`` + ``explode``
-      + ``groupBy(doc, term)`` inside whole-stage codegen; the pandas kernel
-      only slices and varbyte-encodes.
-    - ``tokenizer="python"``: per-token Python dicts inside the kernel (the
-      naive pandas-UDF spelling; kept as a cross-check).
-    """
-    if store_positions and tokenizer not in ("pandas",):
-        # the jvm/python kernels pre-aggregate (doc, term, tf) and never see
-        # token positions — a silent pos=b"" chunk would crash much later in
-        # _merge_group with an opaque IndexError (ADVICE round 2)
-        raise ValueError(
-            f"store_positions=True requires tokenizer='pandas' (or the files/"
-            f"fused paths); tokenizer={tokenizer!r} cannot produce positions"
-        )
+    data, so a resumed run regenerates exactly the missing partitions. The
+    only shuffle is the docs rows into their part_id groups."""
     part = F.pmod(F.xxhash64("conv_id"), F.lit(n_partitions)).cast("int")
     done = completed_partitions(chunks_dir, prefix) if resume else set()
-
-    if tokenizer in ("python", "pandas"):
-        src = docs.select(
-            "doc_id", "conv_id", "text", "dl", part.alias("part_id")
-        )
-        if done:
-            src = src.where(~F.col("part_id").isin([int(x) for x in done]))
-        if tokenizer == "pandas":
-            kern = _chunk_builder_pandas(
-                chunks_dir, prefix, store_positions=store_positions,
-                n_buckets=n_buckets, n_salts=n_salts,
-            )
-        else:
-            kern = _chunk_builder(
-                chunks_dir, prefix, n_buckets=n_buckets, n_salts=n_salts
-            )
-        return src.groupBy("part_id").applyInPandas(
-            kern, schema=MANIFEST_SCHEMA
-        )
-
-    toks = docs.select(
-        "doc_id",
-        "dl",
-        part.alias("part_id"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(SPARK_TOKEN_RE), 0)
-        ).alias("term"),
-    )
+    src = docs.select("doc_id", "text", part.alias("part_id"))
     if done:
-        toks = toks.where(~F.col("part_id").isin([int(x) for x in done]))
-    tf = toks.groupBy("part_id", "doc_id", "dl", "term").agg(
-        F.count("*").cast("long").alias("tf")
+        src = src.where(~F.col("part_id").isin([int(x) for x in done]))
+    kern = _chunk_builder_pandas(
+        chunks_dir, prefix, store_positions=store_positions,
+        n_buckets=n_buckets, n_salts=n_salts,
     )
-    return tf.groupBy("part_id").applyInPandas(
-        _chunk_builder_tf(chunks_dir, prefix, n_buckets=n_buckets,
-                          n_salts=n_salts),
-        schema=MANIFEST_SCHEMA,
-    )
+    return src.groupBy("part_id").applyInPandas(kern, schema=MANIFEST_SCHEMA)
 
 
 def docs_files(docs_dir: str) -> "list[str]":
@@ -1050,7 +862,8 @@ def build_chunks_files(
     prefix: str = "",
     store_positions: bool = False,
     filesystem=None,
-    n_buckets: "int | None" = None,
+    *,
+    n_buckets: int,
     n_salts: int = 8,
 ) -> DataFrame:
     """SPIMI pass, shuffle-free: one task per docs-store file.
@@ -1298,7 +1111,8 @@ def build_segments(
     span_mb: int = 8,
     store_positions: bool = False,
     filesystem=None,
-    n_buckets: "int | None" = None,
+    *,
+    n_buckets: int,
     n_salts: int = 8,
     span_bases: "list[int] | None" = None,
     spans: "list[tuple[str, int, int]] | None" = None,
@@ -2403,7 +2217,6 @@ def build_index(
     n_salts: int = 8,
     heavy_df_threshold: int = 10_000,
     resume: bool = True,
-    tokenizer: str = "files",
     input_split_mb: "int | None" = None,
     source_path: "str | None" = None,
     span_mb: int = 8,
@@ -2419,17 +2232,19 @@ def build_index(
     keeps plain local I/O. Commit protocol per fswrite.py: data files
     first, manifest last, snapshot visibility via the meta.json swap.
 
-    Physical strategies, picked by data shape (same logical output):
+    Two physical strategies, picked from the input alone (same logical
+    output):
 
-    - **fused** (``source_path`` given + dense PK + conversations fit the
-      broadcast limit): ONE corpus pass — each task reads its source span
-      and flushes a complete mini-segment (docs file + SPIMI chunk), Lucene
-      segment-flush style. Corpus stats come from the manifests. The only
-      corpus-wide shuffle in the whole build is the salted compaction merge.
-    - ``tokenizer="files"`` without ``source_path``: two passes (docs store
-      write, then shuffle-free SPIMI over the docs files).
-    - ``tokenizer="pandas"|"jvm"|"python"``: the shuffle-based SPIMI
-      (groupBy(part_id)); also the fallback for non-dense turn_idx.
+    - **fused** (``source_path`` given, dense PKs, enough source spans):
+      ONE corpus pass — each task reads its source span and flushes a
+      complete mini-segment (docs file + SPIMI chunk), Lucene segment-flush
+      style. Corpus stats come from the manifests.
+    - **two-pass files** (everything else: DataFrame-only input, non-dense
+      or duplicated ``turn_idx``, too few spans, too many conversations for
+      the driver-side offset table): the docs store write, then
+      shuffle-free SPIMI over the docs files.
+
+    Both end in the zero-shuffle postings merge (``build_postings_direct``).
 
     ``input_split_mb`` narrows ``spark.sql.files.maxPartitionBytes`` for the
     docs stage of the two-pass path — needed when the source sits in a few
@@ -2440,6 +2255,7 @@ def build_index(
     Returns a summary dict with stage timings (also appended to the metrics
     table — the analog of the reference's tpq/lag stats, A24).
     """
+    t_start = time.time()
     paths = IndexPaths(index_dir)
     metrics: list[tuple[str, str, float]] = []
 
@@ -2450,7 +2266,7 @@ def build_index(
         )
     try:
         fused = False
-        if tokenizer == "files" and source_path:
+        if source_path:
             # the fused pass can't split below row-group granularity: when
             # the source has fewer spans than the requested parallelism
             # (tiny corpora / coarse row groups), the two-pass path fans out
@@ -2554,7 +2370,7 @@ def build_index(
                 metrics.append(("stats", "wall_s", time.time() - t1))
 
         if not fused:
-            t0 = time.time()
+            t1 = time.time()
             docs_done = os.path.exists(os.path.join(paths.docs, "_SUCCESS"))
             if resume and docs_done:
                 # a committed docs store is immutable for this build:
@@ -2564,22 +2380,20 @@ def build_index(
                 pass
             else:
                 docs = build_docs(transcripts)
-                if tokenizer == "files":
-                    # the docs files are the SPIMI work units: if the source
-                    # splits into fewer than n_partitions scan tasks (tiny
-                    # corpora, or one giant unsplittable file), spend one
-                    # shuffle to fan out — otherwise stay map-only (the
-                    # 100 TB regime: splits ≫ cores)
-                    n_input = transcripts.rdd.getNumPartitions()
-                    if n_input < n_partitions:
-                        docs = docs.repartition(n_partitions, "conv_id")
+                # the docs files are the SPIMI work units: if the source
+                # splits into fewer than n_partitions scan tasks (tiny
+                # corpora, or one giant unsplittable file), spend one
+                # shuffle to fan out — otherwise stay map-only (the
+                # 100 TB regime: splits ≫ cores)
+                if transcripts.rdd.getNumPartitions() < n_partitions:
+                    docs = docs.repartition(n_partitions, "conv_id")
                 # snappy: the docs store is a full corpus copy — compression
                 # CPU would dominate this stage; read-heavy postings stay zstd
                 docs.write.mode("overwrite").option(
                     "compression", "snappy"
                 ).parquet(paths.docs)
             docs = spark.read.parquet(paths.docs)
-            metrics.append(("docs", "wall_s", time.time() - t0))
+            metrics.append(("docs", "wall_s", time.time() - t1))
 
             t1 = time.time()
             n_docs, avgdl, total_tokens = docs.agg(
@@ -2590,18 +2404,11 @@ def build_index(
             metrics.append(("stats", "wall_s", time.time() - t1))
 
             t2 = time.time()
-            if tokenizer == "files":
-                manifest = build_chunks_files(
-                    spark, paths.docs, paths.chunks, resume=resume,
-                    store_positions=store_positions, filesystem=filesystem,
-                    n_buckets=n_buckets, n_salts=n_salts,
-                )
-            else:
-                manifest = build_chunks(
-                    docs, paths.chunks, n_partitions, resume=resume,
-                    tokenizer=tokenizer, store_positions=store_positions,
-                    n_buckets=n_buckets, n_salts=n_salts,
-                )
+            manifest = build_chunks_files(
+                spark, paths.docs, paths.chunks, resume=resume,
+                store_positions=store_positions, filesystem=filesystem,
+                n_buckets=n_buckets, n_salts=n_salts,
+            )
             built = manifest.count()  # action: runs the SPIMI pass
             metrics.append(("spimi", "wall_s", time.time() - t2))
             metrics.append(("spimi", "partitions_built", float(built)))
@@ -2666,7 +2473,9 @@ def build_index(
     with open(os.path.join(index_dir, "meta.json"), "w") as f:
         json.dump(meta, f, indent=1)
 
-    wall = time.time() - t0
+    # one start stamp for the whole call: a failed sorted-source pass, a
+    # declined offsets attempt and the two-pass fallback all count
+    wall = time.time() - t_start
     metrics.append(("build", "wall_s", wall))
     metrics.append(("build", "docs_per_s", float(n_docs) / max(wall, 1e-9)))
     append_metrics_driver(paths.metrics, metrics)

@@ -475,7 +475,7 @@ def apply_increments(
             return
         manifest = build_chunks(
             new_docs, paths.chunks, n_delta_parts, resume=True, prefix=prefix,
-            tokenizer="pandas", store_positions=store_pos,
+            store_positions=store_pos,
             n_buckets=int(meta["n_buckets"]),
         )
         manifest.count()
@@ -872,7 +872,7 @@ def _apply_increments_distributed(
     n_delta_parts = max(1, min(int(meta["n_partitions"]), n_new // 4000 + 1))
     manifest = build_chunks(
         new_docs, paths.chunks, n_delta_parts, resume=True, prefix=prefix,
-        tokenizer="pandas", store_positions=store_pos,
+        store_positions=store_pos,
         n_buckets=int(meta["n_buckets"]),
     )
     manifest.count()

@@ -59,49 +59,36 @@ def test_resume_equals_single_run(spark, transcripts_sf0001, tmp_path_factory):
     assert _fingerprint(spark, resumed) == _fingerprint(spark, single)
 
 
+def _chunk_rows(spark, chunks_dir):
+    return sorted(
+        tuple(r)
+        for r in spark.read.parquet(f"{chunks_dir}/part-*.parquet").collect()
+    )
+
+
 def test_resume_hash_mode_equals_single_run(
     spark, transcripts_sf0001, tmp_path_factory
 ):
-    """shuffle-mode resume (part_id = hash(conv_id) % n): the round-1
-    semantics still hold when a custom tokenizer is requested."""
-    single = str(tmp_path_factory.mktemp("idx_single_h"))
-    build_index(
-        spark, transcripts_sf0001, single, resume=False, tokenizer="pandas",
-        **PARAMS,
-    )
-
-    resumed = str(tmp_path_factory.mktemp("idx_resumed_h"))
+    """Hash-partitioned resume (part_id = hash(conv_id) % n, the layout of
+    CDC delta chunks): a partial ``build_chunks`` run followed by a
+    ``resume=True`` run writes exactly the chunk rows of a single run."""
+    n = PARAMS["n_partitions"]
+    layout = dict(n_buckets=PARAMS["n_buckets"], n_salts=PARAMS["n_salts"])
     docs = build_docs(transcripts_sf0001)
-    partial = docs.where(
-        F.pmod(F.xxhash64("conv_id"), F.lit(PARAMS["n_partitions"])) < 5
-    )
-    build_chunks(
-        partial, f"{resumed}/chunks", PARAMS["n_partitions"], tokenizer="pandas",
-        n_buckets=PARAMS["n_buckets"], n_salts=PARAMS["n_salts"],
-    ).count()
-    done = completed_partitions(f"{resumed}/chunks")
-    assert 0 < len(done) < PARAMS["n_partitions"]
 
-    summary = build_index(
-        spark, transcripts_sf0001, resumed, resume=True, tokenizer="pandas",
-        **PARAMS,
-    )
-    assert summary["partitions_built"] == PARAMS["n_partitions"] - len(done)
-    assert _fingerprint(spark, resumed) == _fingerprint(spark, single)
+    single = str(tmp_path_factory.mktemp("chunks_single_h"))
+    build_chunks(docs, single, n, resume=False, **layout).count()
 
+    resumed = str(tmp_path_factory.mktemp("chunks_resumed_h"))
+    partial = docs.where(F.pmod(F.xxhash64("conv_id"), F.lit(n)) < 5)
+    build_chunks(partial, resumed, n, **layout).count()
+    done = completed_partitions(resumed)
+    assert 0 < len(done) < n
 
-def test_jvm_and_python_kernels_build_identical_index(
-    spark, transcripts_sf0001, tmp_path_factory
-):
-    """The JVM-tokenized SPIMI path (production) and the pandas-UDF
-    Python-tokenizer path must produce byte-identical indexes."""
-    a = str(tmp_path_factory.mktemp("idx_jvm"))
-    b = str(tmp_path_factory.mktemp("idx_py"))
-    build_index(spark, transcripts_sf0001, a, resume=False, tokenizer="jvm", **PARAMS)
-    build_index(
-        spark, transcripts_sf0001, b, resume=False, tokenizer="python", **PARAMS
-    )
-    assert _fingerprint(spark, a) == _fingerprint(spark, b)
+    built = build_chunks(docs, resumed, n, resume=True, **layout).count()
+    assert built == len(completed_partitions(single)) - len(done)
+    assert completed_partitions(resumed) == completed_partitions(single)
+    assert _chunk_rows(spark, resumed) == _chunk_rows(spark, single)
 
 
 def test_doc_ids_stable_across_rebuilds(spark, transcripts_sf0001, tmp_path_factory):
@@ -144,11 +131,15 @@ def test_fused_equals_twopass(spark, transcripts_sf0001, tmp_path_factory):
         spark, spark.read.parquet(fine), fused, resume=False,
         source_path=fine, span_mb=0, **PARAMS,
     )
-    from sync2any_spark.index.builder import read_index_meta
-
-    # guard: the fused path actually ran (spans >= n_partitions)
-    assert read_index_meta(fused)  # meta exists
     build_index(spark, spark.read.parquet(fine), twop, resume=False, **PARAMS)
+
+    def fused_rows(idx):
+        m = pq_mod.read_table(f"{idx}/metrics").to_pandas()
+        return list(m[(m.stage == "spimi") & (m.key == "fused")].value)
+
+    # guard: the fused path ran for the first build only
+    assert fused_rows(fused) == [1.0]
+    assert fused_rows(twop) == []
 
     docs_a = sorted(
         (r.doc_id, r.conv_id, r.turn_idx, r.dl)
